@@ -11,7 +11,8 @@ import graft.synth.{GenConfig, ImageGen}
   * cited as evidence in OPTIMIZATION_r06.md only.
   *
   * Usage: sbt "runMain graft.BenchExtra <section>" where section is one
-  * of: minhash, loop, stream, som, clusters, queries (default: all).
+  * of: minhash, loop, loopjobs, stream, loopparts, wav2, rules2,
+  * cacheparts, stream2, som, som2, aqe, queries (default: all).
   */
 object BenchExtra {
 
@@ -179,98 +180,6 @@ object BenchExtra {
       println(s"[extra] decisions equal 32vs4: ${da == db}")
       Seq("target/extra-loop-32", "target/extra-loop-4", "target/extra-loop-8")
         .foreach(d => PipelineLoop.deleteRecursively(new java.io.File(d)))
-    }
-
-    run("embdriver") {
-      val emb = graft.engine.Tables.embeddings(spark, sfDir)
-      val pairs = graft.ops.Similarity.cosineNearDupPairs(
-          emb, dim = 64, threshold = 0.3995, nPlanes = 3, tables = 4)
-        .filter(round(col("cos"), 4) >= 0.40)
-        .select(col("id1"), col("id2")).cache()
-      val np = pairs.count()
-      println(s"[extra] driver pairs = $np")
-      timed("pairs compute (already cached)") { pairs.count(): Unit }
-      // r5-style clusters (localCheckpoint + change probe, no doubling)
-      def clustersR5(p: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-        val edges = p.select(col("id1"), col("id2"))
-          .union(p.select(col("id2").as("id1"), col("id1").as("id2")))
-          .cache()
-        var labels = edges.groupBy(col("id1").as("image_id"))
-          .agg(least(min(col("id2")), first(col("id1"))).as("cluster_id"))
-          .localCheckpoint()
-        var i = 1
-        var converged = false
-        while (i < 20 && !converged) {
-          val next = edges
-            .join(labels, edges("id2") === labels("image_id"), "inner")
-            .groupBy(edges("id1").as("image_id"))
-            .agg(min(col("cluster_id")).as("cluster_id"))
-            .join(labels.select(col("image_id"), col("cluster_id").as("own")),
-              Seq("image_id"))
-            .select(col("image_id"),
-              least(col("cluster_id"), col("own")).as("cluster_id"))
-            .localCheckpoint()
-          converged = next
-            .join(labels.withColumnRenamed("cluster_id", "__old"), Seq("image_id"))
-            .filter(col("cluster_id") =!= col("__old"))
-            .limit(1).count() == 0L
-          labels = next
-          i += 1
-        }
-        println(s"[extra] r5-style iterations: $i converged=$converged")
-        edges.unpersist()
-        labels
-      }
-      timed("clusters r5-style (1)") { clustersR5(pairs).count(): Unit }
-      timed("clusters r5-style (2)") { clustersR5(pairs).count(): Unit }
-      timed("clusters r6 (1)") { graft.discovery.PhashDup.clusters(pairs).count(): Unit }
-      timed("clusters r6 (2)") { graft.discovery.PhashDup.clusters(pairs).count(): Unit }
-      // r6 variant WITHOUT the pointer-doubling hops (A/B)
-      def clustersNoHops(p: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-        val edges = p.select(col("id1"), col("id2"))
-          .union(p.select(col("id2").as("id1"), col("id1").as("id2")))
-          .cache()
-        var labelsCache = edges.groupBy(col("id1").as("image_id"))
-          .agg(least(min(col("id2")), first(col("id1"))).as("cluster_id"))
-          .cache()
-        var labels: org.apache.spark.sql.DataFrame = labelsCache
-        var i = 1
-        var converged = false
-        while (i < 20 && !converged) {
-          val msgs = edges
-            .join(labels, edges("id2") === labels("image_id"), "inner")
-            .select(edges("id1").as("image_id"), col("cluster_id").as("label"),
-              lit(false).as("__own"))
-          val stepped = msgs
-            .unionByName(labels.select(col("image_id"),
-              col("cluster_id").as("label"), lit(true).as("__own")))
-            .groupBy(col("image_id"))
-            .agg(min(col("label")).as("cluster_id"),
-              min(when(col("__own"), col("label"))).as("__prev"))
-            .select(col("image_id"), col("cluster_id"),
-              (col("cluster_id") < col("__prev")).as("__changed"))
-          val obs = org.apache.spark.sql.Observation()
-          val cachedNext = stepped
-            .observe(obs, sum(when(col("__changed"), 1L).otherwise(0L)).as("changed"))
-            .select(col("image_id"), col("cluster_id"))
-            .cache()
-          cachedNext.count(): Unit
-          converged = Option(obs.get("changed")).forall {
-            case n: Long => n == 0L
-            case _ => true
-          }
-          labelsCache.unpersist()
-          labelsCache = cachedNext
-          labels = org.apache.spark.sql.graft.Bridge.flattenLineage(cachedNext)
-          i += 1
-        }
-        println(s"[extra] no-hops iterations: $i converged=$converged")
-        edges.unpersist()
-        labels
-      }
-      timed("clusters r6-nohops (1)") { clustersNoHops(pairs).count(): Unit }
-      timed("clusters r6-nohops (2)") { clustersNoHops(pairs).count(): Unit }
-      pairs.unpersist()
     }
 
     run("wav2") {
@@ -454,21 +363,6 @@ object BenchExtra {
       }
     }
 
-    run("clusters") {
-      timed("qf_phash_clusters cold") {
-        PipelineQueries.queries("qf_phash_clusters")(spark, sfDir).count(): Unit
-      }
-      timed("qf_phash_clusters warm") {
-        PipelineQueries.queries("qf_phash_clusters")(spark, sfDir).count(): Unit
-      }
-      timed("qf_dedup_emb_clusters_driver (1)") {
-        PipelineQueries.queries("qf_dedup_emb_clusters_driver")(spark, sfDir).count(): Unit
-      }
-      timed("qf_dedup_emb_clusters_driver (2)") {
-        PipelineQueries.queries("qf_dedup_emb_clusters_driver")(spark, sfDir).count(): Unit
-      }
-    }
-
     run("som2") {
       import spark.implicits._
       val rnd = new java.util.Random(5L)
@@ -483,34 +377,6 @@ object BenchExtra {
         graft.explain.SomClustering.fit(df, Seq("a", "b", "c", "d")): Unit
       }
       df.unpersist()
-    }
-
-    run("clusters2") {
-      import spark.implicits._
-      // chain graph: 200 nodes in chains of 5 → converges in ~3 iters
-      val pairs = (0 until 200).flatMap { i =>
-        if (i % 5 != 4) Some((f"img$i%09d", f"img${i + 1}%09d")) else None
-      }.toDF("id1", "id2").cache()
-      pairs.count()
-      timed("clusters cold") { graft.discovery.PhashDup.clusters(pairs).count(): Unit }
-      timed("clusters warm 1") { graft.discovery.PhashDup.clusters(pairs).count(): Unit }
-      val jobs = scala.collection.mutable.ArrayBuffer.empty[(Int, Long)]
-      val starts = scala.collection.mutable.Map.empty[Int, Long]
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          starts(js.jobId) = js.time
-        override def onJobEnd(je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-          starts.remove(je.jobId).foreach(t0 => jobs += ((je.jobId, je.time - t0)))
-      }
-      spark.sparkContext.addSparkListener(listener)
-      timed("clusters warm 2") { graft.discovery.PhashDup.clusters(pairs).count(): Unit }
-      spark.sparkContext.removeSparkListener(listener)
-      Thread.sleep(300)
-      println(f"[extra] clusters warm2: ${jobs.size} jobs, sum ${jobs.map(_._2).sum / 1e3}%.2f s")
-      jobs.sortBy(_._1).foreach { case (id, ms) =>
-        println(f"[extra]   job $id%4d ${ms / 1e3}%7.2f s")
-      }
-      pairs.unpersist()
     }
 
     run("aqe") {

@@ -465,9 +465,10 @@ object PipelineQueries {
         .orderBy("id1", "id2")
     }),
 
-    // North-rule duplicate clusters: converged min-label propagation
-    // over the verified pair graph (hash-checked vs DuckDB recursive
-    // transitive closure over the same fixture)
+    // North-rule duplicate clusters: union-find connected components of
+    // the verified pair graph, labelled by the component minimum
+    // (hash-checked vs DuckDB recursive transitive closure over the same
+    // fixture)
     "qf_phash_clusters" -> ((s, _) => {
       writePhashFixture(s)
       PhashDup.clusters(PhashDup.duplicatePairs(PipelineCache.images(s, N)))
@@ -559,10 +560,9 @@ object PipelineQueries {
       s.read.parquet(embPairsFixturePath).orderBy("id1", "id2")
     }),
 
-    // Dedup: semantic duplicate CLUSTERS — converged min-label
-    // propagation over the embedding near-dup pair graph (the same
-    // scale shape as qf_phash_clusters, composed with the cosine
-    // operator). Hash-checked: DuckDB recomputes the transitive closure
+    // Dedup: semantic duplicate CLUSTERS — union-find connected
+    // components of the embedding near-dup pair graph (the same shape
+    // as qf_phash_clusters, composed with the cosine operator). Hash-checked: DuckDB recomputes the transitive closure
     // over the emitted pair fixture with a recursive CTE.
     "qf_dedup_emb_clusters" -> ((s, _) => {
       val emb = graft.ops.Similarity.synthEmbeddings(s, 2000L)
@@ -575,7 +575,7 @@ object PipelineQueries {
     }),
 
     // Same composed shape (hyperplane banding → fused cosine run-scan →
-    // min-label closure) over the DRIVER embeddings table. The driver
+    // union-find closure) over the DRIVER embeddings table. The driver
     // vectors are uniform (max pairwise cosine ≈0.51), so no true
     // near-dups exist at the production 0.97 threshold — the variant
     // runs at a threshold the corpus supports (0.40, 59 true pairs at

@@ -1,7 +1,11 @@
 package graft.discovery
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.types.PhysicalDataType
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Near-duplicate discovery via perceptual-hash banding (north-rule
   * addition; no reference counterpart — SURVEY.md §2.3).
@@ -144,97 +148,75 @@ object PhashDup {
     rawPairs(images, idCol, phashCol, maxHamming)
       .select(col("id2").as(idCol)).distinct()
 
-  /** Duplicate clusters via min-label propagation over the pair graph,
-    * iterated TO CONVERGENCE (no label changes) with a hard iteration
-    * cap — the distributed connected-components standard: each round is
-    * one shuffle join + aggregation, labels are localCheckpoint'ed so
-    * lineage stays flat, and the rounds needed equal the component
-    * diameter (dup chains are short; the cap is a runaway guard, and
-    * hitting it logs nothing silent — the convergence flag is the loop
-    * condition, so a capped run simply returns the best labels found).
-    * Returns (image_id, cluster_id = min id in component) for every id
-    * appearing in a pair. Exact-equivalent to transitive-closure min
-    * reachability once converged (the DuckDB oracle computes it that
-    * way). */
-  def clusters(pairs: DataFrame, maxIterations: Int = 20,
-      hopsAfter: Int = 12): DataFrame = {
+  /** Duplicate clusters: the connected components of the pair graph,
+    * found by union-find in ONE Spark job with no iteration. Each
+    * partition reduces its `(id1, id2)` edges to a spanning forest of
+    * `(vertex, local root)` rows; one collect brings the forests to the
+    * driver, where the same union-find merges them.
+    *
+    * Returns (image_id, cluster_id) for every id appearing in a pair, as
+    * a local frame that keeps the input's id type. cluster_id is the
+    * component minimum in Spark's order for that type (UTF-8 byte order
+    * for strings) — the label the DuckDB recursive-closure oracle
+    * computes. A pair with a null id adds no edge.
+    *
+    * The driver holds every vertex once. A graph too large for it fails
+    * loudly at `spark.driver.maxResultSize`; it is never truncated. There
+    * is no distributed (large-star/small-star) fallback: no workload's
+    * pair graph comes near driver memory. */
+  def clusters(pairs: DataFrame): DataFrame = {
     val edges = pairs.select(col("id1"), col("id2"))
-      .union(pairs.select(col("id2").as("id1"), col("id1").as("id2")))
-      .cache()
-    // lazy init — materialized by the first iteration's action (r6: the
-    // eager localCheckpoint here was one whole extra job)
-    var labelsCache = edges.groupBy(col("id1").as("image_id"))
-      .agg(least(min(col("id2")), first(col("id1"))).as("cluster_id"))
-      .cache()
-    var labels: DataFrame = labelsCache
-    var i = 1
-    var converged = false
-    while (i < maxIterations && !converged) {
-      // ONE job, ONE join, ONE aggregation per iteration (r6: was two
-      // jobs — localCheckpoint + a change probe — over two joins + an
-      // agg): the node's own label joins the min-reduction as a tagged
-      // UNION row instead of a second join (min over messages ∪ own ≡
-      // least(min(nbr), own)), the changed flag is min(messages) < own
-      // computed in the SAME aggregate (labels only ever DECREASE —
-      // exactly the old next≠labels condition), and it rides the
-      // materializing count() as an Observation; cache replaces
-      // localCheckpoint so nothing is serialized per round. Lineage
-      // nests one cached join per iteration — bounded by maxIterations,
-      // and execution always shortcuts at the previous iteration's
-      // cached frame.
-      val msgs = edges
-        .join(labels, edges("id2") === labels("image_id"), "inner")
-        .select(edges("id1").as("image_id"), col("cluster_id").as("label"),
-          lit(false).as("__own"))
-      // r6 ADAPTIVE pointer doubling: after `hopsAfter` plain rounds an
-      // unconverged graph additionally propagates label-of-label
-      // (shortcut hops, the large-star/small-star idea) — remaining
-      // convergence then needs O(log d) rounds instead of O(d), so the
-      // 20-round cap is effectively unreachable (12 + 8 hop rounds
-      // covers diameters past 2^8). Hops are NOT free (one extra
-      // labels⋈labels join per round: measured 0.75 s/round vs 0.33
-      // plain on the sf0.1 graph), and real dup-chain graphs converge
-      // in ≤10 plain rounds — so the common case never pays for them.
-      // Labels stay ids of component members and only ever decrease, so
-      // the CONVERGED state is unchanged with or without hops: stable
-      // under neighbor-min ⇒ per-component constant = component min.
-      val withHops = i > hopsAfter
-      val maybeHops =
-        if (!withHops) Nil
-        else Seq(labels.alias("a")
-          .join(labels.alias("b"), col("a.cluster_id") === col("b.image_id"))
-          .select(col("a.image_id").as("image_id"),
-            col("b.cluster_id").as("label"), lit(false).as("__own")))
-      val stepped = maybeHops.foldLeft(msgs)(_ unionByName _)
-        .unionByName(labels.select(col("image_id"),
-          col("cluster_id").as("label"), lit(true).as("__own")))
-        .groupBy(col("image_id"))
-        .agg(min(col("label")).as("cluster_id"),
-          min(when(col("__own"), col("label"))).as("__prev"))
-        .select(col("image_id"), col("cluster_id"),
-          (col("cluster_id") < col("__prev")).as("__changed"))
-      val obs = org.apache.spark.sql.Observation()
-      val cachedNext = stepped
-        .observe(obs, sum(when(col("__changed"), 1L).otherwise(0L)).as("changed"))
-        .select(col("image_id"), col("cluster_id"))
-        .cache()
-      cachedNext.count(): Unit
-      converged = Option(obs.get("changed")).forall {
-        case n: Long => n == 0L
-        case _ => true // a null sum means zero rows — converged
+    val idType = edges.schema("id1").dataType
+    require(edges.schema("id2").dataType == idType,
+      s"id1 and id2 must share one type: ${edges.schema.simpleString}")
+    val forests = edges.queryExecution.toRdd.mapPartitions { rows =>
+      val uf = new UnionFind(idType)
+      rows.foreach { r =>
+        // the row buffer is reused: clone strings before keeping them
+        def id(i: Int): Any = r.get(i, idType) match {
+          case s: UTF8String => s.clone()
+          case v => v
+        }
+        if (!r.isNullAt(0) && !r.isNullAt(1)) uf.union(id(0), id(1))
       }
-      labelsCache.unpersist()
-      labelsCache = cachedNext
-      // flatten the logical lineage (no job): the step plan references
-      // `labels` twice (join + union), so carrying the raw plan forward
-      // would DOUBLE it per iteration — exponential analysis cost and a
-      // driver OOM once the pair graph needs ~10 rounds (seen at sf0.1).
-      // Flattened AFTER cache+count so its planning picks up the
-      // materialized InMemoryRelation.
-      labels = org.apache.spark.sql.graft.Bridge.flattenLineage(cachedNext)
-      i += 1
+      Iterator.single(uf.labels.filter { case (v, root) => v != root })
+    }.collect()
+    val uf = new UnionFind(idType)
+    forests.foreach(_.foreach { case (v, root) => uf.union(v, root) })
+    org.apache.spark.sql.graft.Bridge.localFrame(pairs.sparkSession,
+      StructType(Seq(StructField("image_id", idType, nullable = false),
+        StructField("cluster_id", idType, nullable = false))),
+      uf.labels.map { case (v, root) => InternalRow(v, root) }.toSeq)
+  }
+
+  /** Union-find over Catalyst id values with union by minimum: every
+    * root is the least member of its set in Spark's order for `idType`,
+    * so `find(v)` is v's component minimum. Path halving keeps finds
+    * near-constant and iterative (a long chain needs no deep stack). */
+  private final class UnionFind(idType: DataType) {
+    private val ord = PhysicalDataType.ordering(idType)
+    private val parent = new java.util.HashMap[Any, Any]()
+
+    def find(v: Any): Any = {
+      if (!parent.containsKey(v)) { parent.put(v, v); return v }
+      var x = v
+      var p = parent.get(x)
+      while (p != x) {
+        val gp = parent.get(p)
+        parent.put(x, gp)
+        x = gp
+        p = parent.get(x)
+      }
+      x
     }
-    edges.unpersist()
-    labels
+
+    def union(a: Any, b: Any): Unit = {
+      val ra = find(a)
+      val rb = find(b)
+      if (ra != rb) { if (ord.lt(ra, rb)) parent.put(rb, ra) else parent.put(ra, rb) }
+    }
+
+    /** (vertex, component minimum) for every vertex seen. */
+    def labels: Array[(Any, Any)] = parent.keySet.toArray.map(v => (v, find(v)))
   }
 }

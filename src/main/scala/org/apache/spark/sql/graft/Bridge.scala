@@ -1,8 +1,12 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.types.StructType
 
 /** Column ↔ catalyst Expression bridge for the engine's custom
   * expressions. Spark 4 removed the public `new Column(Expression)`
@@ -16,20 +20,14 @@ object Bridge {
 
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
-  /** Truncate a DataFrame's LOGICAL lineage without running a job: wrap
-    * the (already planned, typically cached) physical RDD in a flat
-    * LogicalRDD-backed frame. Iterative algorithms whose step plan
-    * references the previous frame more than once (join + union in
-    * PhashDup.clusters) otherwise DOUBLE their logical plan per
-    * iteration — exponential analysis cost and a driver OOM by ~10
-    * iterations. Unlike localCheckpoint this schedules no job and keeps
-    * the cache as the compute shortcut; callers must have materialized
-    * the cache first (the RDD re-executes the plan otherwise). */
-  def flattenLineage(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val spark = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    spark.internalCreateDataFrame(
-      df.queryExecution.toRdd, df.schema, isStreaming = false)
-  }
+  /** A driver-local frame over rows already in Catalyst's internal
+    * form (UTF8String, not String), so values pass through unconverted.
+    * Collecting it runs no Spark job. */
+  def localFrame(spark: SparkSession, schema: StructType,
+      rows: Seq[InternalRow]): DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      LocalRelation(DataTypeUtils.toAttributes(schema), rows))
 
   /** Register a SQL function builder on the session's registry. */
   def register(

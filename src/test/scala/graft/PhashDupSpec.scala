@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.GraftTestHooks
 import org.scalatest.funsuite.AnyFunSuite
 import graft.discovery.PhashDup
 import graft.synth.{GenConfig, ImageGen}
@@ -64,8 +65,8 @@ class PhashDupSpec extends AnyFunSuite {
   }
 
   test("clusters converge on a chain longer than the old fixed 3 rounds") {
-    // path graph a-b-c-d-e-f-g: min-label needs ~diameter rounds to
-    // reach the far end; the convergence-checked loop must finish it
+    // path graph a-b-c-d-e-f-g: every node, however far from "a",
+    // gets the component minimum
     val ids = "abcdefg".map(_.toString)
     val pairs = ids.zip(ids.tail).map { case (x, y) => (x, y) }
       .toSeq.toDF("id1", "id2")
@@ -75,16 +76,67 @@ class PhashDupSpec extends AnyFunSuite {
     assert(labels.values.toSet == Set("a"), labels.toString)
   }
 
-  test("adaptive pointer doubling converges past the plain-round budget") {
-    // r6: a 30-node chain (diameter 29) cannot converge in 19 plain
-    // min-propagation rounds — the shortcut hops that kick in after
-    // `hopsAfter` rounds must finish it within the 20-round cap with
-    // every node labeled by the component minimum
+  test("clusters label a 30-node chain with its minimum") {
+    // diameter 29: the minimum must reach the far end
     val ids = (0 until 30).map(i => f"n$i%03d")
     val pairs = ids.zip(ids.tail).toSeq.toDF("id1", "id2")
     val labels = PhashDup.clusters(pairs).collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
     assert(labels.keySet == ids.toSet)
     assert(labels.values.toSet == Set("n000"), labels.toString)
+  }
+
+  test("clusters label a 10^5-node chain with its minimum") {
+    // edges listed from the far end, spread over several partitions, so
+    // the partition forests must be merged to reach the minimum
+    val ids = (0 until 100000).map(i => f"n$i%06d")
+    val pairs = ids.zip(ids.tail).reverse.toDF("id1", "id2").repartition(4)
+    val labels = PhashDup.clusters(pairs).as[(String, String)].collect()
+    assert(labels.length == ids.length)
+    assert(labels.map(_._1).toSet == ids.toSet)
+    assert(labels.forall(_._2 == "n000000"))
+  }
+
+  test("clusters keep bigint ids and label by native order") {
+    // string order would say "10" < "2"
+    val pairs = Seq((10L, 2L)).toDF("id1", "id2")
+    val out = PhashDup.clusters(pairs)
+    assert(out.schema.map(_.dataType).toSet == Set(org.apache.spark.sql.types.LongType))
+    val got = out.as[(Long, Long)].collect().toMap
+    assert(got == Map(2L -> 2L, 10L -> 2L), got.toString)
+  }
+
+  test("clusters label strings by UTF-8 byte order, as Spark's min does") {
+    // U+FFFF is EF BF BF in UTF-8 and U+1F600 is F0 9F 98 80, so the
+    // byte order puts U+FFFF first; String.compareTo (UTF-16) would pick
+    // the emoji, whose high surrogate D83D sorts below FFFF
+    val (ffff, emoji) = ("\uFFFF", "\uD83D\uDE00")
+    val pairs = Seq((emoji, ffff)).toDF("id1", "id2")
+    val got = PhashDup.clusters(pairs).as[(String, String)].collect().toMap
+    assert(got == Map(ffff -> ffff, emoji -> ffff), got.toString)
+  }
+
+  test("clusters run one job on a cached pair frame and cache nothing") {
+    val ids = (0 until 200).map(i => f"img$i%09d")
+    val pairs = ids.zip(ids.tail).filter(_._1.last != '4')
+      .toDF("id1", "id2").repartition(4).cache()
+    pairs.count()
+    val entries = GraftTestHooks.cachedEntries(spark)
+    val persisted = spark.sparkContext.getPersistentRDDs.size
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+    }
+    GraftTestHooks.drain(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      PhashDup.clusters(pairs).collect()
+      GraftTestHooks.drain(spark)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get == 1, s"${jobs.get} jobs")
+    assert(GraftTestHooks.cachedEntries(spark) == entries, "clusters left a cache entry")
+    assert(spark.sparkContext.getPersistentRDDs.size == persisted)
+    pairs.unpersist()
   }
 }

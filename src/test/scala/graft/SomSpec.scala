@@ -50,6 +50,36 @@ class SomSpec extends AnyFunSuite {
     assert(tie == 2)
   }
 
+  test("two BMU columns over a non-null array compile in one codegen stage") {
+    // array(...) of non-null doubles is a non-null child: the generated
+    // code must still declare the result's null flag, and two BMU locals
+    // in one function must not collide. fallback=false turns a janino
+    // error into a failure instead of a silent interpreted run.
+    val w = SomClustering.initWeights(3, 3, 2, seed = 3L)
+    val w2 = SomClustering.initWeights(3, 3, 2, seed = 4L)
+    val key = "spark.sql.codegen.fallback"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try {
+      val feats = array(col("id").cast("double") / 7.0, sin(col("id").cast("double")))
+      val df = spark.range(100).select(col("id"),
+        SomClustering.bmuColumn(w, feats).as("u1"),
+        SomClustering.bmuColumn(w2, feats).as("u2"))
+      assert(df.queryExecution.executedPlan.exists(
+        _.isInstanceOf[org.apache.spark.sql.execution.WholeStageCodegenExec]))
+      df.collect().foreach { r =>
+        val id = r.getLong(0).toDouble
+        val f = new org.apache.spark.sql.catalyst.util.GenericArrayData(
+          Array[Any](id / 7.0, math.sin(id)))
+        assert(r.getInt(1) == org.apache.spark.sql.graft.Exprs.somBmuScalar(f, w))
+        assert(r.getInt(2) == org.apache.spark.sql.graft.Exprs.somBmuScalar(f, w2))
+      }
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   test("fit is deterministic for a fixed seed") {
     val df = (1 to 60).map(i => (0.1 * (i % 7), 0.05 * (i % 4))).toDF("a", "b").cache()
     val m1 = SomClustering.fit(df, Seq("a", "b"), m = 3, n = 3, epochs = 5)
