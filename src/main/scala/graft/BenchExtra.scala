@@ -11,8 +11,8 @@ import graft.synth.{GenConfig, ImageGen}
   * cited as evidence in OPTIMIZATION_r06.md only.
   *
   * Usage: sbt "runMain graft.BenchExtra <section>" where section is one
-  * of: minhash, loop, loopjobs, stream, loopparts, wav2, rules2,
-  * cacheparts, stream2, som, som2, aqe, queries (default: all).
+  * of: minhash, loop, loopjobs, stream, loopparts, wav2, cacheparts,
+  * stream2, som, aqe, queries (default: all).
   */
 object BenchExtra {
 
@@ -234,60 +234,6 @@ object BenchExtra {
       }
     }
 
-    run("rules2") {
-      timed("images(2000) gen+cache") {
-        PipelineCache.images(spark, 2000L).count(): Unit
-      }
-      timed("models(2000) fit") { PipelineCache.models(spark, 2000L): Unit }
-      timed("scored(2000) build") { PipelineCache.scored(spark, 2000L).count(): Unit }
-      timed("thresholdMedian") { PipelineCache.thresholdMedian(spark, 2000L): Unit }
-      val scored = PipelineCache.scored(spark, 2000L).withColumn("status", lit("clean"))
-      val (t, med) = PipelineCache.thresholdMedian(spark, 2000L)
-      val (rules, labeled) = timed("explainStructured (cold)") {
-        graft.explain.ClusterExplainer.explainStructured(
-          scored, PipelineCache.scoreNames, t, med)
-      }
-      labeled.unpersist()
-      val (r2, l2) = timed("explainStructured (warm)") {
-        graft.explain.ClusterExplainer.explainStructured(
-          scored, PipelineCache.scoreNames, t, med)
-      }
-      l2.unpersist()
-      // decompose the warm call
-      val faulty = scored.filter(col("invalidity_score") >= t).cache()
-      timed("  faulty count") { faulty.count(): Unit }
-      val clusters = timed("  clusterFaulty (KMeans)") {
-        val c = graft.explain.ClusterExplainer.clusterFaulty(
-          faulty, PipelineCache.scoreNames, 4).cache()
-        c.count(); c
-      }
-      val normal = scored.filter(col("invalidity_score") <= med)
-        .orderBy(xxhash64(col("image_id"))).limit(2000).cache()
-      timed("  normal sample count") { normal.count(): Unit }
-      import spark.implicits._
-      val cids = clusters.select("cluster_id").distinct().as[Int].collect().sorted
-      val colsX = col("image_id") +: PipelineCache.scoreNames.map(col)
-      timed("  4 tree fits (concurrent)") {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        val fs = cids.toSeq.map { cid => Future {
-          val clusterRows = faulty.join(
-            clusters.filter(col("cluster_id") === cid), Seq("image_id"), "left_semi")
-          val labeled = normal.select((colsX :+ lit(0.0).as("label")): _*)
-            .unionByName(clusterRows.select((colsX :+ lit(1.0).as("label")): _*))
-          graft.explain.ClusterExplainer.treeStructuredRules(
-            labeled, PipelineCache.scoreNames)
-        } }
-        Await.result(Future.sequence(fs),
-          scala.concurrent.duration.Duration(600, "s")): Unit
-      }
-      faulty.unpersist(); normal.unpersist(); clusters.unpersist()
-      println(s"[extra] rules n=${rules.size} / ${r2.size}")
-      timed("full qf_cluster_rule_support") {
-        PipelineQueries.queries("qf_cluster_rule_support")(spark, sfDir).count(): Unit
-      }
-    }
-
     run("cacheparts") {
       import graft.detect.Scorer
       import graft.discovery.{PhashDup, Thresholds}
@@ -361,22 +307,6 @@ object BenchExtra {
       timed("qf_som_assign warm") {
         PipelineQueries.queries("qf_som_assign")(spark, sfDir).count(): Unit
       }
-    }
-
-    run("som2") {
-      import spark.implicits._
-      val rnd = new java.util.Random(5L)
-      val df = (1 to 200).map(_ => (rnd.nextDouble(), rnd.nextDouble(),
-        rnd.nextDouble(), rnd.nextDouble())).toDF("a", "b", "c", "d")
-        .coalesce(1).cache()
-      df.count()
-      timed("SOM fit 20 epochs (cold)") {
-        graft.explain.SomClustering.fit(df, Seq("a", "b", "c", "d")): Unit
-      }
-      timed("SOM fit 20 epochs (warm)") {
-        graft.explain.SomClustering.fit(df, Seq("a", "b", "c", "d")): Unit
-      }
-      df.unpersist()
     }
 
     run("aqe") {

@@ -43,29 +43,37 @@ object ClusterExplainer {
       scoreCols: Seq[String],
       k: Int,
       seed: Long = 42L,
-      maxFit: Int = 10000): DataFrame = {
-    val spark = faulty.sparkSession
-    import spark.implicits._
+      maxFit: Int = 10000): DataFrame =
+    kmeansAssign(faulty, scoreCols, Seq("image_id"), k, seed, maxFit)
+
+  /** [[clusterFaulty]] carrying the `keep` columns (which include
+    * image_id) through the assignment: returns (keep*, cluster_id). */
+  private def kmeansAssign(
+      faulty: DataFrame,
+      scoreCols: Seq[String],
+      keep: Seq[String],
+      k: Int,
+      seed: Long,
+      maxFit: Int): DataFrame = {
     // r6: vector assembly via the codegen'd array_to_vector instead of
     // a typed Dataset map (object serde per row on the corpus-sized
     // ASSIGNMENT pass; identical DenseVector values, spec/oracle-gated)
-    val assembled = faulty.select(col("image_id"),
+    val assembled = faulty.select((keep.map(col) :+
       org.apache.spark.ml.functions.array_to_vector(
-        array(scoreCols.map(c => col(c).cast("double")): _*)).as("features"))
+        array(scoreCols.map(c => col(c).cast("double")): _*)).as("features")): _*)
       .cache()
     val sample = fitSample(assembled, Seq("image_id"), maxFit).cache()
     val n = sample.count()
     if (n == 0) {
-      assembled.unpersist()
-      return spark.emptyDataFrame
-        .withColumn("image_id", lit("")).withColumn("cluster_id", lit(0)).limit(0)
+      sample.unpersist(); assembled.unpersist()
+      return faulty.select((keep.map(col) :+ lit(0).as("cluster_id")): _*).limit(0)
     }
     val kk = math.min(k.toLong, n).toInt
     val model = new KMeans().setK(kk).setSeed(seed).setMaxIter(10)
       .fit(sample)
     sample.unpersist()
     val out = model.transform(assembled)
-      .select(col("image_id"), col("prediction").as("cluster_id"))
+      .select((keep.map(col) :+ col("prediction").as("cluster_id")): _*)
     // the cache served the sample count + KMeans fit; release it before
     // returning (unpersist is lazy-safe — the caller's first action on
     // `out` recomputes the cheap row→vector map once) so repeated calls
@@ -326,52 +334,51 @@ object ClusterExplainer {
       needLabeled: Boolean): (Seq[ClusterRule], DataFrame) = {
     val spark = scored.sparkSession
     import spark.implicits._
-    val faulty = scored.filter(col("invalidity_score") >= faultyThreshold).cache()
+    val cols = col("image_id") +: scoreCols.map(col)
     // Bounded normal-side sample for tree training — hash-ordered like
     // fitSample, NOT a bare limit: limit-after-shuffle takes whichever
     // partitions answer first, so the trained rules would vary with
     // partition layout.
     val normal = scored.filter(col("invalidity_score") <= normalThreshold)
-      .orderBy(xxhash64(col("image_id"))).limit(2000).cache()
-    val clusters = clusterFaulty(faulty, scoreCols, k).cache()
+      .orderBy(xxhash64(col("image_id"))).limit(2000)
+      .select((cols :+ lit(0.0).as("label")): _*).cache()
+    // One cached member frame: the faulty rows' scores ride through the
+    // k-means assignment, so each cluster's rows are a filter on it —
+    // no per-cluster join. The aggregate that lists the cluster ids
+    // materializes it.
+    val members = kmeansAssign(
+        scored.filter(col("invalidity_score") >= faultyThreshold),
+        scoreCols, "image_id" +: scoreCols, k, seed = 42L, maxFit = 10000)
+      .select((cols :+ lit(1.0).as("label") :+ col("cluster_id")): _*).cache()
+    val cids = members.select("cluster_id").distinct().as[Int].collect().sorted
+    def labeledOf(cid: Int): DataFrame = normal.withColumn("cluster_id", lit(cid))
+      .unionByName(members.filter(col("cluster_id") === cid))
     // Per-cluster tree fits are independent tiny MLlib jobs; run them as
     // CONCURRENT Spark actions so their fixed scheduling latency overlaps
     // (results are deterministic per cluster and re-ordered by id below).
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
-    val cids = clusters.select("cluster_id").distinct().as[Int].collect().sorted
-    val cols = col("image_id") +: scoreCols.map(col)
     val futures = cids.toSeq.map { cid =>
       Future {
-        val clusterRows = faulty.join(
-          clusters.filter(col("cluster_id") === cid), Seq("image_id"), "left_semi")
-        val labeled = normal.select((cols :+ lit(0.0).as("label")): _*)
-          .unionByName(
-            clusterRows.select((cols :+ lit(1.0).as("label")): _*))
-        val rs = treeStructuredRules(labeled, scoreCols).zipWithIndex.map {
+        treeStructuredRules(labeledOf(cid), scoreCols).zipWithIndex.map {
           case (r, i) => ClusterRule(cid, i, r.verdict, r.render, r.conjuncts)
         }
-        (rs, labeled.withColumn("cluster_id", lit(cid)))
       }
     }
-    val perCluster = Await.result(
-      Future.sequence(futures), scala.concurrent.duration.Duration(600, "s"))
-    val rules = perCluster.flatMap(_._1)
-    // Materialize the labeled union BEFORE unpersisting its parents so
-    // the returned frame doesn't silently refit upstream on evaluation.
-    // Rules-only callers (needLabeled=false) skip the union job entirely
-    // and get an empty placeholder frame (never cached, never counted).
+    val rules = Await.result(
+      Future.sequence(futures), scala.concurrent.duration.Duration(600, "s")).flatten
+    // Materialize the labeled union (per cluster: normal rows, then its
+    // members) BEFORE unpersisting its parents so the returned frame
+    // doesn't silently refit upstream on evaluation. Rules-only callers
+    // (needLabeled=false) skip the union job entirely and get an empty
+    // placeholder frame (never cached, never counted).
     val labeledAll =
-      if (needLabeled)
-        perCluster.map(_._2)
-          .reduceOption(_ unionByName _)
-          .getOrElse(normal.limit(0).select((cols :+ lit(0.0).as("label")): _*)
-            .withColumn("cluster_id", lit(0)))
-          .cache()
-      else normal.limit(0).select((cols :+ lit(0.0).as("label")): _*)
-        .withColumn("cluster_id", lit(0))
-    if (needLabeled) labeledAll.count(): Unit
-    faulty.unpersist(); normal.unpersist(); clusters.unpersist()
+      if (needLabeled && cids.nonEmpty) {
+        val all = cids.map(labeledOf).reduce(_ unionByName _).cache()
+        all.count(): Unit
+        all
+      } else normal.limit(0).withColumn("cluster_id", lit(0))
+    normal.unpersist(); members.unpersist()
     (rules, labeledAll)
   }
 }

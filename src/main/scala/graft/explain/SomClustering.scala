@@ -13,25 +13,26 @@ import org.apache.spark.sql.functions._
   *
   * The reference feeds rows one at a time through a TF session
   * (SOM.py:160-168) — O(rows·iters) sequential updates, the
-  * single-node bottleneck SURVEY.md §5 calls out. The standard
-  * distributed formulation is the BATCH SOM: each epoch assigns every
-  * row its BMU in parallel, reduces to m·n (sum-vector, count)
-  * partials with a map-side combine, and the driver applies the
-  * Gaussian-neighbourhood smoothing over the tiny m·n×m·n grid:
+  * single-node bottleneck SURVEY.md §5 calls out. graft fits the BATCH
+  * SOM instead: each epoch assigns every row its BMU, reduces to m·n
+  * (sum-vector, count) partials, and applies the Gaussian-neighbourhood
+  * smoothing over the tiny m·n×m·n grid:
   *
   *   w_j ← Σ_b h_t(j,b)·S_b / Σ_b h_t(j,b)·C_b
   *
   * (S_b/C_b = per-BMU feature sums/counts, h_t the reference's kernel;
-  * units with zero total mass keep their weights). One pass per epoch,
-  * a 25-key shuffle, no learning rate — the batch update is the
-  * closed-form fixed point of the reference's online rule at each
-  * neighbourhood width, so α drops out. With σ→0 an epoch degenerates
-  * to exactly one Lloyd (k-means) step over the occupied units, which
-  * SomSpec asserts.
+  * units with zero total mass keep their weights). No learning rate —
+  * the batch update is the closed-form fixed point of the reference's
+  * online rule at each neighbourhood width, so α drops out. With σ→0 an
+  * epoch degenerates to exactly one Lloyd (k-means) step over the
+  * occupied units, which SomSpec asserts. The fit runs on a bounded
+  * sample ([[clusterFaulty]]), so its epochs run on the driver over the
+  * collected sample — one Spark job per fit, not one per epoch;
+  * assignment of the full input stays a partition-parallel expression.
   *
-  * BMU assignment is a pure Catalyst higher-order-function expression
-  * over a literal codebook (no UDF, no serde): squared-distance fold
-  * per unit, `array_position(array_min)` picks the FIRST minimal unit,
+  * BMU assignment is a native Catalyst expression over the codebook
+  * (no UDF, no serde): squared-distance fold per unit, the FIRST
+  * minimal unit wins,
   * matching tf.argmin's tie rule (SOM.py:76-80) — and the left-to-right
   * fold order makes every distance bit-reproducible by any engine that
   * sums the squared differences in feature order, which is how the
@@ -65,46 +66,32 @@ object SomClustering {
     * engine computes); ties take the lowest unit index — the
     * array_position(array_min) first-match rule.
     *
-    * r6: native expression (Exprs.SomBmu) instead of a typedlit-codebook
-    * higher-order-function chain. The HOF chain inlined the codebook
-    * values into the generated code, so every fit epoch's new weights
-    * forced a fresh whole-stage-codegen compile — ~20 janino compiles
-    * per fit, the dominant cold cost of the SOM queries. The reference-
-    * object codebook keeps one compiled plan for all epochs; arithmetic
-    * is bit-identical (SomSpec parity gate vs the HOF chain). */
+    * A native expression (Exprs.SomBmu) holding the codebook as a
+    * codegen reference object, so a new codebook reuses the compiled
+    * plan; a typedlit-codebook higher-order-function chain would inline
+    * the weights and recompile per codebook. SomSpec gates its BMUs
+    * bit-identical to that chain. */
   def bmuColumn(weights: Array[Array[Double]], features: Column): Column = {
     require(weights.nonEmpty && weights.forall(_.length == weights.head.length),
       "codebook must be non-empty with uniform dimension")
     org.apache.spark.sql.graft.Exprs.somBmu(features, weights)
   }
 
-  /** The pre-r6 Catalyst HOF chain, kept as the parity reference for
-    * the SomSpec gate. */
-  private[graft] def bmuColumnHof(weights: Array[Array[Double]], features: Column): Column = {
-    val codebook = typedlit(weights.map(_.toSeq).toSeq)
-    val dists = transform(codebook, wv =>
-      aggregate(zip_with(wv, features, (a, b) => (a - b) * (a - b)),
-        lit(0.0), (acc, v) => acc + v))
-    (array_position(dists, array_min(dists)) - 1).cast("int")
-  }
-
-  /** Fit the map. Epochs are Spark jobs over `data`; per epoch the only
-    * shuffle carries (partition × m·n) keys × (dim+1) doubles, so an
-    * epoch costs one scan regardless of corpus size — the scale
-    * contract. The smoothing matrix is m·n × m·n on the driver (25×25
+  /** Fit the map. `data` is collected once, as per-partition row arrays
+    * ordered by partition id, and every epoch runs on the driver over
+    * them: one Spark job per fit. The input must therefore fit on the
+    * driver — [[clusterFaulty]] bounds it by `maxFit` (10k rows × 9
+    * scores ≈ 0.7 MB); a larger input fails loudly at
+    * `spark.driver.maxResultSize`, the same stance as
+    * `PhashDup.clusters`. The smoothing matrix is m·n × m·n (25×25
     * here), negligible.
     *
-    * DETERMINISM: the per-epoch partials are keyed by
-    * (input-partition-id, bmu) and the driver folds them in that sorted
-    * order, so the floating-point summation order — and therefore the
-    * fitted codebook — is bit-reproducible for any FIXED input
-    * partitioning (a plain groupBy(bmu) would merge map-side partials
-    * in shuffle-fetch order, which a real cluster randomizes run to
-    * run). Repartitioning the input differently still changes the sums
-    * at last-ulp, as with any distributed FP reduce.
-    *
-    * `data` should be cached by the caller if it is not a trivial scan
-    * (fit reads it `epochs` times). */
+    * DETERMINISM: each epoch accumulates (count, sum) partials per input
+    * partition in row order, then adds them into the per-unit totals in
+    * ascending partition-id order, so the fitted codebook is
+    * bit-reproducible for any FIXED input partitioning (SomSpec pins a
+    * 7-partition fit's bits). Repartitioning the input differently still
+    * changes the sums at last-ulp, as with any partitioned FP reduce. */
   def fit(
       data: DataFrame,
       featureCols: Seq[String],
@@ -126,51 +113,45 @@ object SomClustering {
     }
     val spark0 = data.sparkSession
     import spark0.implicits._
-    val assembled = data.select(
+    // the decoder returns a fresh array per row, so holding them is safe
+    val parts = data.select(
       array(featureCols.map(c => col(c).cast("double")): _*).as("arr"))
       .as[Array[Double]]
+      .mapPartitions(it =>
+        Iterator((org.apache.spark.TaskContext.getPartitionId(), it.toArray)))
+      .collect().sortBy(_._1).map(_._2)
     var w = initWeights(m, n, dim, seed)
     var t = 0
     while (t < epochs) {
       // reference decay: σ_t = σ₀·(1 − t/T) (SOM.py:96-100); at the
       // last epoch the factor is 1/T, never zero
       val sigT = sig0 * (1.0 - t.toDouble / epochs)
-      // r6: single-stage epoch — the former groupBy((pid, bmu)) Catalyst
-      // aggregate shuffled its 25-key partials and re-planned a 2-stage
-      // job every epoch (~115 ms/epoch of pure latency on a bounded
-      // sample). The mapPartitions pass accumulates the SAME partials in
-      // the SAME per-partition row order (map-side sums were already
-      // per-(pid, bmu), so the doubles are bit-identical) and collects
-      // them directly: one stage, no exchange, no per-epoch re-plan.
-      val wLocal = w
-      val unitsLocal = units
-      val dimLocal = dim
-      val partials = assembled.mapPartitions { it =>
-        val pid = org.apache.spark.TaskContext.getPartitionId()
-        val cnt = new Array[Long](unitsLocal)
-        val sums = Array.fill(unitsLocal)(new Array[Double](dimLocal))
-        it.foreach { arr =>
+      val cnt = Array.fill(units)(0L)
+      val sums = Array.fill(units)(Array.fill(dim)(0.0))
+      parts.foreach { rows =>
+        val pCnt = new Array[Long](units)
+        val pSums = Array.fill(units)(new Array[Double](dim))
+        rows.foreach { arr =>
           // ragged/null rows cannot occur (arr = cast score columns);
           // skip defensively rather than fold them into unit 0
-          if (arr != null && arr.length == dimLocal) {
-            val b = org.apache.spark.sql.graft.Exprs.somBmuArray(arr, wLocal)
+          if (arr != null && arr.length == dim) {
+            val b = org.apache.spark.sql.graft.Exprs.somBmuArray(arr, w)
             if (b >= 0) {
-              cnt(b) += 1L
+              pCnt(b) += 1L
               var i = 0
-              while (i < dimLocal) { sums(b)(i) += arr(i); i += 1 }
+              while (i < dim) { pSums(b)(i) += arr(i); i += 1 }
             }
           }
         }
-        (0 until unitsLocal).iterator.filter(cnt(_) > 0L)
-          .map(b => (pid, b, cnt(b), sums(b)))
-      }.collect()
-        .sortBy(p => (p._1, p._2))
-      val cnt = Array.fill(units)(0L)
-      val sums = Array.fill(units)(Array.fill(dim)(0.0))
-      partials.foreach { case (_, b, c, s) =>
-        cnt(b) += c
-        var i = 0
-        while (i < dim) { sums(b)(i) += s(i); i += 1 }
+        var b = 0
+        while (b < units) {
+          if (pCnt(b) > 0L) {
+            cnt(b) += pCnt(b)
+            var i = 0
+            while (i < dim) { sums(b)(i) += pSums(b)(i); i += 1 }
+          }
+          b += 1
+        }
       }
       val s2 = sigT * sigT
       w = Array.tabulate(units) { j =>
@@ -219,8 +200,8 @@ object SomClustering {
     * same shape as ClusterExplainer.clusterFaulty): cluster faulty rows
     * by BMU cell. `cluster_id` is the BMU unit index, so there are at
     * most m·n groups — the reference's grouping contract
-    * (SOM.py:218-230). Raise `maxFit` (or pass the full frame) to fit
-    * on more data; each extra epoch stays a single pass. */
+    * (SOM.py:218-230). Raise `maxFit` to fit on more data, within what
+    * the driver can hold ([[fit]]). */
   def clusterFaulty(
       faulty: DataFrame,
       scoreCols: Seq[String],
@@ -236,10 +217,7 @@ object SomClustering {
     // policy itself is ClusterExplainer.fitSample, shared with KMeans.
     val sample = ClusterExplainer.fitSample(faulty, Seq("image_id"), maxFit)
       .select(scoreCols.map(c => col(c).cast("double")): _*)
-      .cache()
-    val model =
-      try fit(sample, scoreCols, m, n, epochs, seed = seed)
-      finally sample.unpersist()
+    val model = fit(sample, scoreCols, m, n, epochs, seed = seed)
     assign(faulty, "image_id", scoreCols, model)
       .select(col("image_id"), col("bmu_unit").as("cluster_id"))
   }

@@ -234,11 +234,10 @@ object Exprs {
   /** Batch-SOM best-matching-unit over a codebook reference object —
     * the r6 replacement for the `typedlit(codebook)` higher-order-
     * function chain in SomClustering.bmuColumn. The HOF chain inlines
-    * the codebook VALUES into the generated code, so every fit epoch
-    * (new weights) forced a fresh janino compile (~20 compiles per
-    * fit, the dominant cold cost of qf_som_assign); the codebook here
-    * rides as a codegen reference, the generated source is identical
-    * across epochs, and the whole fit shares ONE compiled plan shape.
+    * the codebook VALUES into the generated code, so every new codebook
+    * forced a fresh janino compile; the codebook here rides as a
+    * codegen reference, so the generated source is identical for every
+    * codebook and all assignments share ONE compiled plan shape.
     *
     * Arithmetic parity is exact and spec-gated (SomSpec): distances
     * fold left-to-right from 0.0 over (w_i − f_i)² like the
@@ -290,7 +289,7 @@ object Exprs {
   }
 
   /** [[somBmuScalar]] over a plain double[] (shared by the SOM fit's
-    * single-stage epoch pass). Never returns −1 for a well-sized
+    * driver-side epochs). Never returns −1 for a well-sized
     * array. */
   def somBmuArray(f: Array[Double], weights: Array[Array[Double]]): Int = {
     val dim = weights(0).length

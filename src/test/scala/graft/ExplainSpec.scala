@@ -1,6 +1,7 @@
 package graft
 // (50k-row bounded-fit coverage added round 2)
 
+import org.apache.spark.sql.GraftTestHooks
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.explain.ClusterExplainer
@@ -115,5 +116,38 @@ class ExplainSpec extends AnyFunSuite {
         if (2 * nInv < m.length) assert(r.verdict == "valid", r.rule)
       }
     }
+  }
+
+  private def sha256(s: String): String =
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(s.getBytes("UTF-8")).map(b => f"$b%02x").mkString
+
+  test("explainStructured keeps its rules and labeled rows, in fewer jobs") {
+    val scored = PipelineCache.scored(spark, 2000L).withColumn("status", lit("clean"))
+    val knownCount = graft.synth.ImageGen.knownFaults(spark, PipelineCache.genCfg(2000L)).count()
+    val (t, med) = graft.discovery.Thresholds.discover(
+      scored, "invalidity_score", "status", knownCount)
+    scored.count()
+    val ((rules, labeled), jobs) = GraftTestHooks.jobsDuring(spark)(
+      ClusterExplainer.explainStructured(scored, PipelineCache.scoreNames, t, med))
+    val bits = (d: Double) => java.lang.Double.doubleToRawLongBits(d).toString
+    val ruleLines = rules.map(r => s"${r.cluster_id}|${r.rule_id}|${r.verdict}|${r.rule}|" +
+      r.conjuncts.map(c => c.feature + c.op + bits(c.threshold)).mkString("&"))
+    // every row in the returned order; doubles by their raw bits
+    val rowLines = labeled.select(
+      (col("cluster_id") +: col("image_id") +: col("label") +:
+        PipelineCache.scoreNames.map(col)): _*).collect().map(_.toSeq.map {
+      case d: java.lang.Double => bits(d)
+      case v => String.valueOf(v)
+    }.mkString(","))
+    labeled.unpersist()
+    // digests captured from the per-cluster semi-join implementation
+    assert(rules.size == 12 && rowLines.length == 7706)
+    assert(sha256(ruleLines.mkString("\n")) ==
+      "4e3532bded02d82c94ce0a66a016baa7e257ffbe804d8174bda191260de232cc")
+    assert(sha256(rowLines.mkString("\n")) ==
+      "fc72ce04542adf36524a9ba9b5547ae8f1c263b73b6c306caa687ffe6dc4b4ab")
+    // the per-cluster semi-join implementation ran 61 jobs here
+    assert(jobs < 61, s"$jobs jobs")
   }
 }

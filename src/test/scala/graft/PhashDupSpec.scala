@@ -123,18 +123,8 @@ class PhashDupSpec extends AnyFunSuite {
     pairs.count()
     val entries = GraftTestHooks.cachedEntries(spark)
     val persisted = spark.sparkContext.getPersistentRDDs.size
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet(): Unit
-    }
-    GraftTestHooks.drain(spark)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      PhashDup.clusters(pairs).collect()
-      GraftTestHooks.drain(spark)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(jobs.get == 1, s"${jobs.get} jobs")
+    val (_, jobs) = GraftTestHooks.jobsDuring(spark)(PhashDup.clusters(pairs).collect())
+    assert(jobs == 1, s"$jobs jobs")
     assert(GraftTestHooks.cachedEntries(spark) == entries, "clusters left a cache entry")
     assert(spark.sparkContext.getPersistentRDDs.size == persisted)
     pairs.unpersist()

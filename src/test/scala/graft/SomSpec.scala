@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{Column, GraftTestHooks}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.explain.SomClustering
@@ -19,6 +20,16 @@ class SomSpec extends AnyFunSuite {
       u += 1
     }
     best
+  }
+
+  /** The Catalyst higher-order-function BMU chain over a typedlit
+    * codebook: the parity reference for the native expression. */
+  private def bmuColumnHof(weights: Array[Array[Double]], features: Column): Column = {
+    val codebook = typedlit(weights.map(_.toSeq).toSeq)
+    val dists = transform(codebook, wv =>
+      aggregate(zip_with(wv, features, (a, b) => (a - b) * (a - b)),
+        lit(0.0), (acc, v) => acc + v))
+    (array_position(dists, array_min(dists)) - 1).cast("int")
   }
 
   test("native SomBmu expression is bit-identical to the HOF chain") {
@@ -42,7 +53,7 @@ class SomSpec extends AnyFunSuite {
       .select(col("arr").cast("array<double>").as("arr"))
     val cmp = df.select(
       SomClustering.bmuColumn(w, col("arr")).as("nat"),
-      SomClustering.bmuColumnHof(w, col("arr")).as("hof"))
+      bmuColumnHof(w, col("arr")).as("hof"))
     assert(cmp.filter(not(col("nat") <=> col("hof"))).count() == 0L)
     // the tie row resolves to the FIRST minimal unit on both paths
     val tie = Seq(Tuple1(w(2).clone())).toDF("arr")
@@ -89,10 +100,10 @@ class SomSpec extends AnyFunSuite {
   }
 
   test("fit is deterministic over multi-partition input (pid-ordered reduce)") {
-    // the per-epoch partials are keyed by (partition, bmu) and folded
-    // in sorted order on the driver, so the same input layout must give
-    // a bit-identical codebook no matter how shuffle fetch interleaves;
-    // hash-repartitioned input keeps the layout itself deterministic
+    // the per-epoch partials are folded in partition-id order, so the
+    // same input layout must give a bit-identical codebook no matter
+    // which task finishes first; hash-repartitioned input keeps the
+    // layout itself deterministic
     val df = (1 to 300).map(i => (i, 0.1 * (i % 11), 0.05 * (i % 6)))
       .toDF("id", "a", "b").repartition(7, col("id")).cache()
     df.count()
@@ -100,6 +111,25 @@ class SomSpec extends AnyFunSuite {
     val m2 = SomClustering.fit(df, Seq("a", "b"), m = 3, n = 3, epochs = 6)
     df.unpersist()
     assert(m1.weights.flatten.toSeq == m2.weights.flatten.toSeq)
+    // the codebook bits of the per-epoch Spark job this driver-side fold
+    // replaced, which summed the same partials sorted by (partition, bmu)
+    assert(m1.weights.flatten.map(java.lang.Double.doubleToRawLongBits).toSeq == Seq(
+      4587497600477867727L, 4593819010553566734L, 4598175219367891842L,
+      4593285597285860666L, 4600877378651823896L, 4594572339261646597L,
+      4603129178836364238L, 4597274497116145831L, 4603102686852729083L,
+      4593724603684239862L, 4602078339948762914L, 4580461075607172240L,
+      4606732058550086137L, 4593671620128139590L, 4605088245065910225L,
+      4594392195464998128L, 4604127803485850754L, 4585486819992568862L))
+  }
+
+  test("a 20-epoch fit runs one Spark job") {
+    val df = (1 to 200).map(i => (0.1 * (i % 7), 0.05 * (i % 4)))
+      .toDF("a", "b").repartition(3).cache()
+    df.count()
+    val (_, jobs) = GraftTestHooks.jobsDuring(spark)(
+      SomClustering.fit(df, Seq("a", "b"), m = 3, n = 3, epochs = 20))
+    df.unpersist()
+    assert(jobs == 1, s"$jobs jobs")
   }
 
   test("assign rejects a feature list that does not match the codebook dim") {

@@ -122,4 +122,18 @@ class StreamingSpec extends AnyFunSuite {
       assert(rs.count(!_.getBoolean(2)) == 1)
     }
   }
+
+  test("qf_stream_window writes its shard again after the shard is deleted") {
+    // another process's stale-scratch sweep may delete this process's
+    // shard between two runs; the second run must rebuild it
+    val query = PipelineQueries.queries("qf_stream_window")
+    val first = query(spark, "").collect().toSeq
+    val shard = new java.io.File(
+      s"target/graft-qf-stream-p${ProcessHandle.current().pid()}-shard")
+    assert(shard.isDirectory)
+    PipelineLoop.deleteRecursively(shard)
+    val second = query(spark, "").collect().toSeq
+    assert(shard.isDirectory)
+    assert(second.nonEmpty && second == first)
+  }
 }
