@@ -97,41 +97,18 @@ import graft.synth.{GenConfig, ImageGen}
 object Bench {
 
   private[graft] def session(cpus: Int, shufflePartitions: Int = 0): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions",
-        (if (shufflePartitions > 0) shufflePartitions else cpus).toString)
-      // -Dgraft.bench.aqe=false turns AQE off for a measurement JVM: the
-      // scaling children run fixed 64-partition plans where AQE's only
-      // contribution is driver-side stage re-planning latency — a fixed
-      // cost that does not shrink with executor count and is therefore
-      // noise in the N-vs-4N ratio (see BENCH.md calibration).
-      .config("spark.sql.adaptive.enabled",
-        sys.props.getOrElse("graft.bench.aqe", "true"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // JVM case mapping for lower()/upper(): the ICU path pays a
-      // multi-minute CollationAwareUTF8String static init per JVM under
-      // thread contention (observed: 32 executor threads parked on the
-      // class-init monitor) — unacceptable startup tax at any scale.
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      // Disable RPC-backed session-artifact classloader: janino codegen
-      // class-resolution misses otherwise round-trip the driver file
-      // server per identifier (observed 40s+ stage compiles).
-      .config("spark.sql.artifact.isolation.enabled", "false")
-      // Shuffle scratch on tmpfs + single-file-per-mapper sort writer:
-      // the bypass-merge writer creates maps*reducers tiny files whose
-      // open/mmap latency on the virtio disk dominated small shuffles
-      // (observed 5s-41s variance on identical jobs). Per-process subdir
-      // so a killed JVM's leak is reapable (Scratch.cleanupOrphans) —
-      // round 3 left 5.8 GiB of dead blockmgr dirs resident in tmpfs.
-      .config("spark.local.dir", graft.engine.Scratch.localDir("bench"))
-      .config("spark.shuffle.sort.bypassMergeThreshold", "2")
-      .config("spark.file.transferTo", "false")
-      .config("spark.io.compression.codec", "lz4")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    val s = graft.engine.Session.local(cpus, "bench")
+    // Runtime SQL confs, set on every call so they also reach a reused
+    // session (the in-process crosscheck flips graft.bench.aqe).
+    if (shufflePartitions > 0)
+      s.conf.set("spark.sql.shuffle.partitions", shufflePartitions.toLong)
+    // -Dgraft.bench.aqe=false turns AQE off for a measurement JVM: the
+    // scaling children run fixed 64-partition plans where AQE's only
+    // contribution is driver-side stage re-planning latency — a fixed
+    // cost that does not shrink with executor count and is therefore
+    // noise in the N-vs-4N ratio (see BENCH.md calibration).
+    s.conf.set("spark.sql.adaptive.enabled",
+      sys.props.getOrElse("graft.bench.aqe", "true"))
     s
   }
 

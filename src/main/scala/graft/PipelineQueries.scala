@@ -821,7 +821,7 @@ object PipelineQueries {
           !f.getName.startsWith(s"graft-qf-stream-p${ProcessHandle.current().pid()}-") &&
           graft.engine.Scratch.newestMtime(f) <
             System.currentTimeMillis() - 30 * 60 * 1000L)
-        .foreach(PipelineLoop.deleteRecursively)
+        .foreach(graft.engine.Scratch.deleteRecursively)
       val dir = s"target/graft-qf-stream-p${ProcessHandle.current().pid()}-shard"
       writeOnce(dir) {
         // overwrite: a pid-reused leftover dir must not fail the write
@@ -851,10 +851,10 @@ object PipelineQueries {
         // writeOnce: the sink appends, so a second invocation in the
         // same process must reuse the fixture, not re-append to it.
         writeOnce(streamRowsFixturePath) {
-          PipelineLoop.deleteRecursively(new java.io.File(streamRowsFixturePath))
+          graft.engine.Scratch.deleteRecursively(new java.io.File(streamRowsFixturePath))
           // a pid-reused stale checkpoint would mark the shard already
           // processed and leave the fixture empty — always start fresh
-          PipelineLoop.deleteRecursively(new java.io.File(s"$dir-rows-ckpt"))
+          graft.engine.Scratch.deleteRecursively(new java.io.File(s"$dir-rows-ckpt"))
           val qRows = scored.select(col("image_id"), col("ts"), col("decision"))
             .writeStream.format("parquet")
             .option("path", streamRowsFixturePath)
@@ -1554,7 +1554,7 @@ object PipelineLoop {
   @volatile private var res: ValidationRun.RunResult = _
   def cachedLoop(spark: SparkSession): ValidationRun.RunResult = synchronized {
     if (res == null) {
-      deleteRecursively(new java.io.File(loopDir))
+      graft.engine.Scratch.deleteRecursively(new java.io.File(loopDir))
       // r6: adaptive parts (4 at n=1000, was 32) — metrics, thresholds
       // and decisions verified bit-identical across partition counts;
       // the loop's cost is job count × task overhead, not data
@@ -1569,10 +1569,4 @@ object PipelineLoop {
     * bench's floor-of-2 second sweep must time real work, not a memo
     * hit. */
   def reset(): Unit = synchronized { res = null }
-
-  // delegate to the null-safe engine helper: listFiles() returns null
-  // when the directory vanishes between the isDirectory check and the
-  // listing (two concurrent Verify processes resetting the same scratch)
-  def deleteRecursively(f: java.io.File): Unit =
-    graft.engine.Scratch.deleteRecursively(f)
 }

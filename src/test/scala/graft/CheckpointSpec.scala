@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.detect.Scorer
+import graft.engine.Scratch
 import graft.models.ModelCheckpoint
 
 class CheckpointSpec extends AnyFunSuite {
@@ -10,7 +11,7 @@ class CheckpointSpec extends AnyFunSuite {
 
   test("model state round-trips through the checkpoint and scores identically") {
     val dir = "target/graft-model-ckpt"
-    PipelineLoop.deleteRecursively(new java.io.File(dir))
+    Scratch.deleteRecursively(new java.io.File(dir))
     val images = PipelineCache.images(spark, 500L)
     val m1 = Scorer.fitOrLoad(spark, images, Some(dir)) // fits + saves
     val m2 = Scorer.fitOrLoad(spark, images, Some(dir)) // loads
@@ -27,7 +28,7 @@ class CheckpointSpec extends AnyFunSuite {
 
   test("fingerprint or version mismatch forces a refit (no stale model reuse)") {
     val dir = "target/graft-model-ckpt-fp"
-    PipelineLoop.deleteRecursively(new java.io.File(dir))
+    Scratch.deleteRecursively(new java.io.File(dir))
     val images = PipelineCache.images(spark, 500L)
     val m = PipelineCache.models(spark, 500L)
     ModelCheckpoint.save(spark, m, dir, fingerprint = "n=500;seed=42")
@@ -40,7 +41,7 @@ class CheckpointSpec extends AnyFunSuite {
   test("corrupt checkpoint bytes degrade to None, not an exception") {
     import spark.implicits._
     val dir = "target/graft-model-ckpt-bad"
-    PipelineLoop.deleteRecursively(new java.io.File(dir))
+    Scratch.deleteRecursively(new java.io.File(dir))
     graft.engine.TableIO.createOrReplace(
       Seq((ModelCheckpoint.FormatVersion, "fp", Array[Byte](1, 2, 3)))
         .toDF("version", "fingerprint", "state"),
